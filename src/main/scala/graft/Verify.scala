@@ -33,13 +33,6 @@ object Verify {
     // dump so the driver ships them with the parquet the oracle hashes
     // (r22, verdict #1 — the /tmp sidecar was never driver-visible).
     sys.props("graft.forensics.dir") = outDir
-    SparkEntry.queries.filter(kv => keyFilter(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -52,6 +45,29 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // Per-key outcome, rewritten after every key so a run that dies midway
+    // still records what finished and why a key failed:
+    // {"<key>": {"status": "ok"|"failed", "wall_s": s[, "error_class": …,
+    // "error": …]}}. check_oracle.py globs only query dirs, so it skips it.
+    val status = scala.collection.mutable.ArrayBuffer.empty[String]
+    SparkEntry.queries.filter(kv => keyFilter(kv._1)).foreach { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val failure =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(e)
+        }
+      val wall = f"${(System.nanoTime() - t0) / 1e9}%.3f"
+      val cause = failure.fold("") { e =>
+        s""", "error_class": ${q(e.getClass.getName)}, "error": ${q(String.valueOf(e.getMessage))}"""
+      }
+      val ok = if (failure.isEmpty) "ok" else "failed"
+      status += s"""${q(name)}: {"status": "$ok", "wall_s": $wall$cause}"""
+      Files.writeString(Paths.get(s"$outDir/_status.json"), status.mkString("{", ",\n", "}\n"))
+    }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -411,8 +411,8 @@ object TensorQueries {
   /** Byte-domain twin of [[tensorMorphCounts]]: the thresholded mask is
     * encoded as a native uint8 TBlock image and every morphology pass —
     * halo exchange included — stays 1 byte/pixel (TMorph); only the final
-    * count widens. Same oracle as the float path: the two
-    * implementations must agree bit-for-bit. */
+    * count widens. Same oracle as [[tensorMorphCounts]], whose float64
+    * entry points run this same TMorph kernel on a BOOL view. */
   val tensorUint8Morph: Q = (s, dir) => {
     val bin = TBlock.fromBlocks(Filters.mapBlocks(Images.eventsRaster(s, dir)) { b =>
       b.data.map(v => if (v > 150.0) 1.0 else 0.0)

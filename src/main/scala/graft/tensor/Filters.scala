@@ -12,8 +12,9 @@ import org.apache.spark.sql.Dataset
   * to scipy.ndimage with exactly these definitions.)
   *
   * Separable ops (gaussian, uniform, sobel, prewitt, laplace) run as
-  * sequential 1-d passes inside one padded kernel — one halo shuffle per
-  * operator regardless of dimensionality.
+  * sequential 1-d passes inside one padded kernel — one halo exchange per
+  * operator regardless of dimensionality. Kernels see float64 [[Halo]]
+  * views; the exchange itself runs on [[THalo]]'s byte payloads.
   */
 object Filters {
 
@@ -631,12 +632,10 @@ object Filters {
     * compare (skimage-style; ndfilters/_threshold.py). Emits 1.0 where
     * image > smoothed − offset.
     *
-    * CO-PARTITIONED (r22, guide §2.4): the old form ran the smoothing
-    * halo exchange and then SHUFFLE-JOINED image with smoothed on
-    * (imageId, idx) — three full-payload exchanges. The image now pays
-    * ONE partitionBy placement; the smoothing ships face slabs only and
-    * the compare is a narrow partition-local zip (both sides hold the
-    * co-partitioned layout). */
+    * CO-PARTITIONED: the image (as an F64 view) pays ONE placement
+    * ([[THalo.partitionBlocks]]); the smoothing ships face slabs only
+    * and the compare is a narrow partition-local zip (both sides hold the
+    * co-partitioned layout), so no pixel join shuffles the payload. */
   def thresholdLocal(ds: Dataset[Block], ndim: Int, blockSize: Int,
       method: String = "gaussian", offset: Double = 0.0, mode: String = "reflect",
       cval: Double = 0.0, param: Double = 0.0): Dataset[Block] = {
@@ -653,18 +652,21 @@ object Filters {
         orderStage(Seq.fill(d0)(blockSize), None)(w => kthSmallest(w, w.length / 2))
       case other => throw new IllegalArgumentException(s"threshold_local method: $other")
     }
-    val parts = math.max(1, ds.rdd.getNumPartitions)
-    val placed = Halo.partitionBlocks(ds, parts)
-    val smoothed = Halo.mapOverlapP(placed, parts, depth, Boundary.of(mode, cval))(kernel)
+    val f64 = DType.F64
+    val blocks = ds.rdd.map(TBlock.fromBlock(_, f64))
+    val parts = math.max(1, blocks.getNumPartitions)
+    val placed = THalo.partitionBlocks(blocks, parts)
+    val smoothed = THalo.mapOverlapP(placed, parts, depth, Boundary.of(mode, cval))(
+      p => f64.encode(kernel(p.decoded)))
     val out = placed.zipPartitions(smoothed, preservesPartitioning = true) { (ait, bit) =>
-      val sm = scala.collection.mutable.HashMap.empty[(String, Seq[Int]), Block]
-      bit.foreach(b => sm((b.imageId, b.idx)) = b)
-      ait.map { img =>
-        val s = sm((img.imageId, img.idx))
+      val sm = bit.map(b => (b.imageId, b.idx) -> b.data).toMap
+      ait.map { t =>
+        val img = t.toBlock
+        val s = f64.decode(sm((t.imageId, t.idx)))
         val o = new Array[Double](img.data.length)
         var i = 0
         while (i < o.length) {
-          o(i) = if (img.data(i) > s.data(i) - offset) 1.0 else 0.0
+          o(i) = if (img.data(i) > s(i) - offset) 1.0 else 0.0
           i += 1
         }
         img.copy(data = o)

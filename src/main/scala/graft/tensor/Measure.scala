@@ -427,11 +427,11 @@ object Measure {
       buf.toArray
     }
     // SLAB-PAIR exchange (r21, guide §2.3 — shuffle the proxy, not the
-    // payload): the old Halo.exchange-based edge emit shuffled every
-    // block's FULL label payload (the padded-block reassembly needs the
-    // center piece co-located with its halo, so the exchange moves the
-    // whole dataset — right for stencils that compute over the padded
-    // array, pure waste here where only boundary adjacency matters).
+    // payload): a padded-block halo exchange would place every block's
+    // FULL label payload (the reassembly co-locates each block with its
+    // halo, so THalo's placement moves the whole dataset — right for
+    // stencils that compute over the padded array, pure waste here where
+    // only boundary adjacency matters).
     // Each adjacent block PAIR now exchanges depth-1 boundary slabs keyed
     // by the unordered pair id; the scan runs in global coordinates over
     // the two slabs and emits exactly the cross-block (max, min) label
@@ -536,7 +536,7 @@ object Measure {
     * (see the call site in [[label]] step 2). Every block emits, toward
     * each in-grid neighbor direction o ∈ {−1,0,1}^d \ {0}, its depth-1
     * boundary slab on that face (full extent on axes where o = 0; the
-    * same slab geometry Halo.emit uses), keyed by the UNORDERED block
+    * same slab geometry THalo.emit uses), keyed by the UNORDERED block
     * pair — so a group holds at most two slabs, one per side, and
     * all-background slabs are never shipped. The scan walks the
     * lexicographically-smaller block's slab in GLOBAL coordinates under

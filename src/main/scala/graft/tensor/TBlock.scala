@@ -1,5 +1,7 @@
 package graft.tensor
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 
 /** Element dtypes for typed block payloads (SURVEY §1.1/§1.2: the
@@ -197,7 +199,9 @@ object DType {
       java.lang.Double.longBitsToDouble(bits)
     }
     def write(d: Array[Byte], i: Int, v: Double): Unit = {
-      var bits = java.lang.Double.doubleToLongBits(v)
+      // raw bits: every double, NaN payloads included, round-trips
+      // exactly (the float64 halo view relies on it)
+      var bits = java.lang.Double.doubleToRawLongBits(v)
       var k = 0
       while (k < 8) { d(8 * i + k) = (bits & 0xff).toByte; bits >>>= 8; k += 1 }
     }
@@ -347,31 +351,52 @@ object BNd {
   }
 }
 
-/** Byte-domain halo exchange — the same one-shuffle plan as [[Halo]]
-  * (slab emission → groupByKey(target) → assemble + boundary resolve),
-  * but every shuffled payload is the NATIVE dtype byte array. On a uint8
-  * image the halo shuffle moves exactly 1/8 of what the float64 path
-  * moves; TensorSpec pins the byte widths. */
+/** Byte-domain halo (ghost-cell) exchange — the engine's one
+  * replacement for the reference's `map_overlap` pattern (every
+  * ndfilters/ndmorph op: dask_image/ndfilters/_utils.py::_get_depth_boundary
+  * ≈ L15–60). Every shuffled payload is the NATIVE dtype byte array; the
+  * float64 entry points ([[Halo]], [[Morph]]) ride it as F64/BOOL views.
+  *
+  * Plan shape:
+  *   1. [[partitionBlocks]] places each block once in a hash layout keyed
+  *      by (imageId, idx) — the only shuffle that moves whole payloads;
+  *   2. every block emits the face/edge/corner slabs its neighbors' padded
+  *      windows need, keyed by the neighbor, shuffled into the same layout;
+  *   3. a narrow zip reassembles each block + halo and resolves array-edge
+  *      margins via the boundary mode, so kernels never see the boundary.
+  *
+  * A chain of N stencil ops over the layout ([[mapOverlapP]]) pays one
+  * placement + N slab shuffles (≈ 2·d·depth/chunk of the data each — the
+  * traffic dask schedules as inter-worker task dependencies). On a uint8
+  * image every shuffle moves 1/8 of what float64 payloads would;
+  * TensorSpec pins the byte widths.
+  *
+  * Partition invariant: an RDD[TBlock] produced by [[partitionBlocks]] —
+  * or by [[mapOverlapP]] over such an RDD, since kernels never change a
+  * block's idx — holds each block in partition
+  * `HashPartitioner(parts).getPartition((imageId, idx))`. */
 object THalo {
 
+  /** One neighbor slab on its way to the block it pads; `dstLo` is where
+    * it lands in the target's padded array. */
   case class TPiece(
       imageId: String,
       targetIdx: Seq[Int],
-      side: Seq[Int],
+      dstLo: Seq[Int],
       shape: Seq[Int],
       data: Array[Byte],
-      origin: Seq[Int],
-      blockShape: Seq[Int],
-      chunk: Seq[Int],
-      arrayShape: Seq[Int],
       dtype: String)
 
   /** Block + assembled halo; `padded` is packed per the block dtype with
-    * shape `block.shape + 2*depth`. */
+    * shape `block.shape + 2*depth`; element (c) corresponds to global
+    * coordinate `block.origin − depth + c`. */
   case class TPadded(block: TBlock, depth: Seq[Int], padded: Array[Byte]) {
     def paddedShape: Array[Int] =
       block.shape.indices.map(k => block.shape(k) + 2 * depth(k)).toArray
     def bnd: BNd = BNd.of(paddedShape, block.dt.bytes, padded)
+    /** The float64 working view — decoded at the kernel edge, inside the
+      * task, never on the wire. */
+    def decoded: Halo.Padded = Halo.Padded(block.toBlock, depth, block.dt.decode(padded))
   }
 
   /** map_overlap in the byte domain: `kernel` sees the typed padded
@@ -380,65 +405,71 @@ object THalo {
       kernel: TPadded => Array[Byte]): Dataset[TBlock] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    exchange(ds, depth, mode).map(p => p.block.copy(data = kernel(p)))
+    spark.createDataset(
+      exchangeRdd(ds.rdd, _ => depth, mode).map(p => p.block.copy(data = kernel(p))))
   }
 
+  /** Assemble every block + halo (placement, then slab exchange). */
   def exchange(ds: Dataset[TBlock], depth: Seq[Int],
       mode: Boundary): Dataset[TPadded] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    val wrap = mode == Boundary.Wrap
-    ds.flatMap(b => emit(b, depth, wrap))
-      .groupByKey(p => (p.imageId, p.targetIdx))
-      .mapGroups { (_: (String, Seq[Int]), it: Iterator[TPiece]) =>
-        assemble(it.toSeq, depth, mode)
-      }
+    spark.createDataset(exchangeRdd(ds.rdd, _ => depth, mode))
   }
 
-  // ------------------------------------------------- co-partitioned form
-  // Typed twin of [[Halo.partitionBlocks]]/[[Halo.mapOverlapP]] (r22):
-  // over a known hash layout the center payload never crosses a shuffle —
-  // only face slabs do — and a chain of ops pays ONE payload placement.
-  // Same partition invariant: block b sits in partition
-  // HashPartitioner(parts).getPartition((imageId, idx)).
+  /** Single-op exchange over unplaced blocks: one placement with a
+    * partition per input partition, then the slab exchange. `depthOf`
+    * maps a block's rank to its per-axis depth, so a uniform-depth
+    * caller needs no eager ndim probe. */
+  private[tensor] def exchangeRdd(blocks: RDD[TBlock], depthOf: Int => Seq[Int],
+      mode: Boundary): RDD[TPadded] = {
+    val parts = math.max(1, blocks.getNumPartitions)
+    exchangeP(partitionBlocks(blocks, parts), parts, depthOf, mode)
+  }
 
-  def partitionBlocks(ds: Dataset[TBlock], parts: Int): org.apache.spark.rdd.RDD[TBlock] =
-    ds.rdd.map(b => ((b.imageId, b.idx), b))
-      .partitionBy(new org.apache.spark.HashPartitioner(parts)).values
+  /** Place blocks into the co-partitioned layout: the ONE payload
+    * shuffle a chain pays. Downstream consumers (slab emission + every
+    * zip) re-read this exchange's shuffle files, not the lineage. */
+  def partitionBlocks(blocks: RDD[TBlock], parts: Int): RDD[TBlock] =
+    blocks.map(b => ((b.imageId, b.idx), b)).partitionBy(new HashPartitioner(parts)).values
 
-  private[tensor] def exchangeP(blocks: org.apache.spark.rdd.RDD[TBlock], parts: Int,
-      depth: Seq[Int], mode: Boundary): org.apache.spark.rdd.RDD[TPadded] = {
+  /** Slab-only halo exchange over co-partitioned blocks: neighbors'
+    * boundary slabs shuffle to the partition owning the target key; the
+    * block's own payload never moves. */
+  private def exchangeP(blocks: RDD[TBlock], parts: Int, depthOf: Int => Seq[Int],
+      mode: Boundary): RDD[TPadded] = {
     val wrap = mode == Boundary.Wrap
-    val part = new org.apache.spark.HashPartitioner(parts)
     val slabs = blocks
-      .flatMap(b => emit(b, depth, wrap).tail) // neighbors only; center stays put
+      .flatMap(b => emit(b, depthOf(b.ndim), wrap))
       .map(p => ((p.imageId, p.targetIdx), p))
-      .partitionBy(part)
+      .partitionBy(new HashPartitioner(parts))
     blocks.zipPartitions(slabs, preservesPartitioning = true) { (bit, sit) =>
-      val byKey = scala.collection.mutable.HashMap
-        .empty[(String, Seq[Int]), scala.collection.mutable.ArrayBuffer[TPiece]]
-      sit.foreach { case (k, p) =>
-        byKey.getOrElseUpdate(k,
-          scala.collection.mutable.ArrayBuffer.empty[TPiece]) += p
-      }
-      bit.map { b =>
-        val center = TPiece(b.imageId, b.idx, Seq.fill(b.ndim)(0), b.shape, b.data,
-          b.origin, b.shape, b.chunk, b.arrayShape, b.dtype)
-        val ps = center +: byKey.getOrElse((b.imageId, b.idx),
-          scala.collection.mutable.ArrayBuffer.empty[TPiece]).toSeq
-        assemble(ps, depth, mode)
-      }
+      val byKey = sit.toSeq.groupMap(_._1)(_._2)
+      bit.map(b => assemble(b, byKey.getOrElse((b.imageId, b.idx), Nil), depthOf(b.ndim), mode))
     }
   }
 
   /** Typed map_overlap over co-partitioned blocks (result keeps the
     * partition invariant; persist before chaining — consumed twice). */
-  def mapOverlapP(blocks: org.apache.spark.rdd.RDD[TBlock], parts: Int,
+  def mapOverlapP(blocks: RDD[TBlock], parts: Int,
       depth: Seq[Int], mode: Boundary)(
-      kernel: TPadded => Array[Byte]): org.apache.spark.rdd.RDD[TBlock] =
-    exchangeP(blocks, parts, depth, mode).map(p => p.block.copy(data = kernel(p)))
+      kernel: TPadded => Array[Byte]): RDD[TBlock] =
+    exchangeP(blocks, parts, _ => depth, mode).map(p => p.block.copy(data = kernel(p)))
 
-  private[tensor] def emit(b: TBlock, depth: Seq[Int], wrap: Boolean): Seq[TPiece] = {
+  /** One axis of a slab: target block index, source range in this block,
+    * where it lands in the target's padded array, and whether it is this
+    * block's own extent on its own window. */
+  private case class Seg(target: Int, srcLo: Int, len: Int, dstLo: Int, own: Boolean)
+
+  /** The slabs one block sends. Target block j's padded window on axis k
+    * is [origin_j − depth, origin_j + shape_j + depth); under Wrap it is
+    * read modulo the array extent, so the block is also matched at
+    * shifts ±n. Every overlap of this block with another block's window
+    * ships, cut to the overlap. For non-wrap modes that is the 3^d − 1
+    * face/edge/corner slabs of the immediate neighbors; under Wrap a
+    * short edge block can leave a margin reaching one block further,
+    * which the overlap form covers as well. */
+  private def emit(b: TBlock, depth: Seq[Int], wrap: Boolean): Seq[TPiece] = {
     val d = b.ndim
     require(depth.length == d, s"halo depth rank ${depth.length} != ndim $d")
     depth.indices.foreach { k =>
@@ -446,91 +477,78 @@ object THalo {
         s"halo depth ${depth(k)} exceeds chunk ${b.chunk(k)} on axis $k (rechunk first)")
     }
     val grid = b.gridDims
+    val axes = (0 until d).map { k =>
+      val (i, n, c, o) = (b.idx(k), b.arrayShape(k), b.chunk(k), b.origin(k))
+      val targets =
+        if (wrap) (-2 to 2).map(t => math.floorMod(i + t, grid(k))).distinct
+        else (i - 1 to i + 1).filter(j => j >= 0 && j < grid(k))
+      for {
+        j <- targets
+        sh <- if (wrap) Seq(-n, 0, n) else Seq(0)
+        winLo = j * c - depth(k)
+        lo = math.max(o + sh, winLo)
+        hi = math.min(o + b.shape(k) + sh, math.min(n, (j + 1) * c) + depth(k))
+        if lo < hi
+      } yield Seg(j, lo - o - sh, hi - lo, lo - winLo, own = j == i && sh == 0)
+    }
     val w = b.dt.bytes
-    val center = TPiece(b.imageId, b.idx, Seq.fill(d)(0), b.shape, b.data,
-      b.origin, b.shape, b.chunk, b.arrayShape, b.dtype)
     val src = BNd.of(b.shape.toArray, w, b.data)
-    val dirs = Grid.cartesian(Seq.fill(d)(3)).map(_.map(_ - 1)).filter(_.exists(_ != 0))
-    val neighbors = dirs.flatMap { o =>
-      if (o.indices.exists(k => o(k) != 0 && depth(k) == 0)) None
+    Grid.cartesian(axes.map(_.length)).flatMap { pick =>
+      val segs = pick.indices.map(k => axes(k)(pick(k)))
+      if (segs.forall(_.own)) None // the block itself stays put
       else {
-        val rawTarget = b.idx.indices.map(k => b.idx(k) + o(k))
-        val target =
-          if (wrap) rawTarget.indices.map(k => math.floorMod(rawTarget(k), grid(k)))
-          else rawTarget
-        val inGrid = target.indices.forall(k => target(k) >= 0 && target(k) < grid(k))
-        if (!inGrid) None
-        else {
-          val lo = new Array[Int](d); val slabShape = new Array[Int](d)
-          var k = 0
-          while (k < d) {
-            o(k) match {
-              case 1 =>
-                val s = math.min(depth(k), b.shape(k)); lo(k) = b.shape(k) - s; slabShape(k) = s
-              case -1 =>
-                val s = math.min(depth(k), b.shape(k)); lo(k) = 0; slabShape(k) = s
-              case _ => lo(k) = 0; slabShape(k) = b.shape(k)
-            }
-            k += 1
-          }
-          val slab = BNd.zeros(slabShape, w)
-          slab.copyRegion(src, lo, slabShape, new Array[Int](d))
-          Some(TPiece(b.imageId, target, o.map(-_), slabShape.toSeq, slab.data,
-            b.origin, b.shape, b.chunk, b.arrayShape, b.dtype))
-        }
+        val shape = segs.map(_.len).toArray
+        val slab = BNd.zeros(shape, w)
+        slab.copyRegion(src, segs.map(_.srcLo).toArray, shape, new Array[Int](d))
+        Some(TPiece(b.imageId, segs.map(_.target), segs.map(_.dstLo), shape.toSeq, slab.data,
+          b.dtype))
       }
     }
-    center +: neighbors
   }
 
-  private[tensor] def assemble(pieces: Seq[TPiece], depth: Seq[Int],
+  /** Reassemble a padded block from its own payload and its neighbors'
+    * slabs, then resolve array-edge margins via the boundary mode. */
+  private def assemble(center: TBlock, slabs: Seq[TPiece], depth: Seq[Int],
       mode: Boundary): TPadded = {
-    val center = pieces.find(_.side.forall(_ == 0))
-      .getOrElse(throw new IllegalStateException("halo group without center piece"))
     // a mixed-depth glob (8-bit and 16-bit files under one imageId) would
     // otherwise splice slabs of different element widths into one payload
-    require(pieces.forall(_.dtype == center.dtype),
+    require(slabs.forall(_.dtype == center.dtype),
       s"halo: mixed dtypes under one imageId " +
-        s"(${pieces.map(_.dtype).distinct.mkString(", ")}) — promote before stenciling")
-    val d = center.shape.length
-    val dt = DType.of(center.dtype)
+        s"(${(center.dtype +: slabs.map(_.dtype)).distinct.mkString(", ")}) — " +
+        "promote before stenciling")
+    val d = center.ndim
+    val dt = center.dt
     val w = dt.bytes
-    val shape = center.blockShape
+    val shape = center.shape
     val padShape = shape.indices.map(k => shape(k) + 2 * depth(k)).toArray
     val out = BNd.zeros(padShape, w)
     val filled = new Array[Boolean](out.size)
 
-    for (p <- pieces) {
-      val pn = BNd.of(p.shape.toArray, w, p.data)
-      val dstLo = new Array[Int](d)
-      var k = 0
-      while (k < d) {
-        dstLo(k) = p.side(k) match {
-          case 0 => depth(k)
-          case -1 => depth(k) - p.shape(k)
-          case _ => depth(k) + shape(k)
-        }
-        k += 1
-      }
-      out.copyRegion(pn, new Array[Int](d), p.shape.toArray, dstLo)
+    def put(dstLo: Seq[Int], pShape: Seq[Int], data: Array[Byte]): Unit = {
+      val lo = dstLo.toArray
+      out.copyRegion(BNd.of(pShape.toArray, w, data), new Array[Int](d), pShape.toArray, lo)
       // mark filled cells
       val c = new Array[Int](d)
-      var done = p.shape.exists(_ == 0)
+      var done = pShape.exists(_ == 0)
       while (!done) {
         val dc = new Array[Int](d)
         var j = 0
-        while (j < d) { dc(j) = dstLo(j) + c(j); j += 1 }
+        while (j < d) { dc(j) = lo(j) + c(j); j += 1 }
         filled(out.offset(dc)) = true
         var j2 = d - 1
         var carry = true
         while (carry && j2 >= 0) {
           c(j2) += 1
-          if (c(j2) < p.shape(j2)) carry = false else { c(j2) = 0; j2 -= 1 }
+          if (c(j2) < pShape(j2)) carry = false else { c(j2) = 0; j2 -= 1 }
         }
         done = carry
       }
     }
+    put(depth, shape, center.data)
+    slabs.foreach(p => put(p.dstLo, p.shape, p.data))
 
+    // resolve unfilled margin cells (beyond the array edge) via the
+    // boundary mode on global coords
     val origin = center.origin
     val arrayShape = center.arrayShape
     mode match {
@@ -555,6 +573,7 @@ object THalo {
               src(k) = gr - (origin(k) - depth(k))
               k += 1
             }
+            // resolved coordinate must land on a filled cell
             out.copyElem(out, out.offset(src), off)
           }
           var j = d - 1
@@ -566,10 +585,7 @@ object THalo {
           done = carry
         }
     }
-    val block = TBlock(center.imageId, center.targetIdx, center.origin,
-      center.blockShape, center.chunk, center.arrayShape, center.dtype,
-      java.util.Arrays.copyOf(center.data, center.data.length))
-    TPadded(block, depth, out.data)
+    TPadded(center, depth, out.data)
   }
 }
 
@@ -667,8 +683,7 @@ object TFilters {
     val spark = ds.sparkSession
     import spark.implicits._
     THalo.exchange(ds, depth, mode).map { p =>
-      val asF64 = Halo.Padded(p.block.toBlock, p.depth, p.block.dt.decode(p.padded))
-      p.block.copy(dtype = outDtype.name, data = outDtype.encode(kernel(asF64)))
+      p.block.copy(dtype = outDtype.name, data = outDtype.encode(kernel(p.decoded)))
     }
   }
 

@@ -36,13 +36,14 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("typed halo exchange equals the float64 exchange, random geometry/depth/boundary") {
-    // The byte-domain THalo re-implements slab emission + assembly on
-    // packed payloads; this pins it cell-for-cell against the float64
-    // Halo over random shapes, chunkings, per-axis depths, and all five
-    // boundary modes — the failure modes (stride slips, side-sign flips,
-    // boundary resolve off-by-ones) are exactly the ones tiny fixed
-    // fixtures miss.
+  test("halo exchange equals a naive full-array pad at f64/u8/u16, random geometry/depth/boundary") {
+    // THalo's slab emission + assembly (and the float64 Halo view over
+    // it) against an independent oracle: pad the WHOLE array, then cut
+    // each block's window — padded(c) = full(resolve(origin − depth + c)),
+    // cval where Constant resolves outside. Random shapes, chunkings,
+    // per-axis depths, and all five boundary modes: the failure modes
+    // (stride slips, side-sign flips, boundary resolve off-by-ones) are
+    // exactly the ones tiny fixed fixtures miss.
     val rnd = new scala.util.Random(7)
     val modes = Seq(Boundary.Reflect, Boundary.Nearest, Boundary.Mirror,
       Boundary.Wrap, Boundary.Constant(3.0))
@@ -54,16 +55,31 @@ class PropertySpec extends SparkSpec {
       val depth = Seq(rnd.nextInt(math.min(3, chunks(0)) + 1),
         rnd.nextInt(math.min(3, chunks(1)) + 1))
       val mode = modes(trial % modes.length)
+      def naive(b: Block): Seq[Double] = {
+        val padShape = Array(b.shape(0) + 2 * depth(0), b.shape(1) + 2 * depth(1))
+        for (i <- 0 until padShape(0); j <- 0 until padShape(1)) yield {
+          val gi = Boundary.resolve(mode, b.origin(0) - depth(0) + i, shape(0))
+          val gj = Boundary.resolve(mode, b.origin(1) - depth(1) + j, shape(1))
+          mode match {
+            case Boundary.Constant(cval) if gi < 0 || gj < 0 => cval
+            case _ => img(Array(gi, gj))
+          }
+        }
+      }
       val blocks = Grid.blockify(spark, s"ph$trial", img, chunks)
-      val f64 = Halo.exchange(blocks, depth, mode).collect()
-        .map(p => p.block.idx -> p.padded.toSeq).toMap
-      val u8 = THalo.exchange(TBlock.fromBlocks(blocks, DType.U8), depth, mode)
-        .collect()
-        .map(p => p.block.idx -> DType.U8.decode(p.padded).toSeq).toMap
-      assert(u8.keySet == f64.keySet, s"trial $trial: block sets differ")
-      for ((idx, pad) <- f64)
-        assert(u8(idx) == pad,
-          s"trial $trial (chunks=$chunks depth=$depth mode=$mode) idx=$idx diverges")
+      val oracle = blocks.collect().map(b => b.idx -> naive(b)).toMap
+      def check(path: String, got: Map[Seq[Int], Seq[Double]]): Unit = {
+        assert(got.keySet == oracle.keySet, s"trial $trial $path: block sets differ")
+        for ((idx, pad) <- oracle)
+          assert(got(idx) == pad,
+            s"trial $trial $path (shape=${shape.toSeq} chunks=$chunks depth=$depth " +
+              s"mode=$mode) idx=$idx diverges")
+      }
+      check("Halo", Halo.exchange(blocks, depth, mode).collect()
+        .map(p => p.block.idx -> p.padded.toSeq).toMap)
+      for (dt <- Seq(DType.F64, DType.U8, DType.U16))
+        check(dt.name, THalo.exchange(TBlock.fromBlocks(blocks, dt), depth, mode).collect()
+          .map(p => p.block.idx -> dt.decode(p.padded).toSeq).toMap)
     }
   }
 

@@ -155,6 +155,19 @@ class TensorSpec extends SparkSpec {
       assert(rt.sameElements(in), s"${dt.name} round-trip: ${rt.toSeq} vs ${in.toSeq}")
       assert(dt.encode(in).length == in.length * dt.bytes)
     }
+    // F64/C128 carry every double bit for bit — the float64 halo view
+    // round-trips through F64 — signed zero, infinities and the extremes
+    // included. NaN must decode to NaN; sameElements cannot see NaN, so it
+    // is checked on its own.
+    val edge = Array(-0.0, 0.0, Double.PositiveInfinity, Double.NegativeInfinity,
+      Double.MinPositiveValue, -Double.MinPositiveValue, Double.MaxValue, -Double.MaxValue)
+    def bits(a: Array[Double]): Seq[Long] = a.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    for (dt <- Seq(DType.F64, DType.C128)) {
+      val rt = dt.decode(dt.encode(edge))
+      assert(bits(rt) == bits(edge), s"${dt.name} must round-trip bit for bit: ${rt.toSeq}")
+      val nan = dt.decode(dt.encode(Array(Double.NaN, 1.0)))
+      assert(nan(0).isNaN && nan(1) == 1.0, s"${dt.name} NaN round-trip: ${nan.toSeq}")
+    }
     // float16 known values: exactly-representable halves are identity,
     // the max finite half survives, overflow saturates to Inf, RNE rounds
     def h1(v: Double): Double = DType.F16.decode(DType.F16.encode(Array(v)))(0)
@@ -235,32 +248,64 @@ class TensorSpec extends SparkSpec {
     assert(maxAbsDiff(viaBytes, viaF64) == 0.0)
   }
 
-  test("byte-domain morphology equals the float64 path, 1 byte/pixel throughout") {
-    val q = Nd.zeros(Array(20, 27))
-    for (i <- q.data.indices) q.data(i) = if ((i * 7919 + 13) % 256 > 150) 1.0 else 0.0
-    for (chunks <- Seq(Seq(20, 27), Seq(7, 9)); iters <- Seq(1, 2)) {
-      val blocks = Grid.blockify(spark, "m", q, chunks)
-      val typed = TBlock.fromBlocks(blocks, DType.U8)
-      def check(name: String,
-          t: org.apache.spark.sql.Dataset[graft.tensor.TBlock],
-          f: org.apache.spark.sql.Dataset[Block]): Unit = {
-        t.collect().foreach { b =>
-          assert(b.dtype == "uint8" && b.data.length == b.shape.product,
-            s"$name: payload widened beyond 1 byte/px")
-        }
-        val viaBytes = Grid.unblockify(TBlock.toBlocks(t))
-        val viaF64 = Grid.unblockify(f)
-        assert(maxAbsDiff(viaBytes, viaF64) == 0.0,
-          s"$name diverges (chunks=$chunks iters=$iters)")
+  test("binary morphology equals a naive scipy oracle via Morph and TMorph, 1 byte/pixel throughout") {
+    // Independent oracle: full-array scipy binary erosion/dilation on the
+    // default cross structure, the outside of the array reading as the
+    // border value (0) on every iteration; foreground is any value != 0.0.
+    val cross = Morph.binaryStructure(2, 1)
+    def step(fg: Array[Boolean], h: Int, w: Int, erode: Boolean): Array[Boolean] =
+      Array.tabulate(h * w) { t =>
+        val (i, j) = (t / w, t % w)
+        val hits = for (di <- -1 to 1; dj <- -1 to 1 if cross(Array(di + 1, dj + 1)) != 0.0)
+          yield {
+            val (a, b) = (i + di, j + dj)
+            a >= 0 && a < h && b >= 0 && b < w && fg(a * w + b)
+          }
+        if (erode) hits.forall(identity) else hits.exists(identity)
       }
-      check("erosion", TMorph.binaryErosion(typed, 2, iterations = iters),
-        Morph.binaryErosion(blocks, 2, iterations = iters))
-      check("dilation", TMorph.binaryDilation(typed, 2, iterations = iters),
-        Morph.binaryDilation(blocks, 2, iterations = iters))
-      check("opening", TMorph.binaryOpening(typed, 2, iterations = iters),
-        Morph.binaryOpening(blocks, 2, iterations = iters))
-      check("closing", TMorph.binaryClosing(typed, 2, iterations = iters),
-        Morph.binaryClosing(blocks, 2, iterations = iters))
+    def naive(x: Nd, passes: Seq[Boolean], iters: Int): Nd = {
+      val Array(h, w) = x.shape
+      var fg = x.data.map(_ != 0.0)
+      for (erode <- passes; _ <- 0 until iters) fg = step(fg, h, w, erode)
+      Nd.of(x.shape, fg.map(b => if (b) 1.0 else 0.0))
+    }
+    val binary = Nd.zeros(Array(20, 27))
+    for (i <- binary.data.indices)
+      binary.data(i) = if ((i * 7919 + 13) % 256 > 150) 1.0 else 0.0
+    // a float image with non-binary values pins "nonzero is foreground"
+    // through the BOOL codec: 0.5, -2.0 and NaN are foreground, -0.0 is not
+    val values = Array(0.0, 0.5, -2.0, -0.0, Double.NaN, 0.0, 3.0)
+    val nonBinary = Nd.zeros(Array(20, 27))
+    for (i <- nonBinary.data.indices)
+      nonBinary.data(i) = values((i * 7919 + 13) % 256 % values.length)
+    type F = (org.apache.spark.sql.Dataset[Block], Int) => org.apache.spark.sql.Dataset[Block]
+    type T = (org.apache.spark.sql.Dataset[TBlock], Int) => org.apache.spark.sql.Dataset[TBlock]
+    val ops: Seq[(String, Seq[Boolean], F, T)] = Seq(
+      ("erosion", Seq(true), (d, n) => Morph.binaryErosion(d, 2, iterations = n),
+        (d, n) => TMorph.binaryErosion(d, 2, iterations = n)),
+      ("dilation", Seq(false), (d, n) => Morph.binaryDilation(d, 2, iterations = n),
+        (d, n) => TMorph.binaryDilation(d, 2, iterations = n)),
+      ("opening", Seq(true, false), (d, n) => Morph.binaryOpening(d, 2, iterations = n),
+        (d, n) => TMorph.binaryOpening(d, 2, iterations = n)),
+      ("closing", Seq(false, true), (d, n) => Morph.binaryClosing(d, 2, iterations = n),
+        (d, n) => TMorph.binaryClosing(d, 2, iterations = n)))
+    val s = spark
+    import s.implicits._
+    for ((img, typedAs) <- Seq((binary, DType.U8), (nonBinary, DType.BOOL));
+        chunks <- Seq(Seq(20, 27), Seq(7, 9)); iters <- Seq(1, 2);
+        (name, passes, viaFloat, viaBytes) <- ops) {
+      val blocks = Grid.blockify(spark, "m", img, chunks)
+      val expected = naive(img, passes, iters).data
+      val where = s"$name (${typedAs.name} chunks=$chunks iters=$iters)"
+      assert(Grid.unblockify(viaFloat(blocks, iters)).data.sameElements(expected),
+        s"Morph $where diverges from the oracle")
+      val typed = viaBytes(TBlock.fromBlocks(blocks, typedAs), iters).collect()
+      typed.foreach { b =>
+        assert(b.dtype == typedAs.name && b.data.length == b.shape.product,
+          s"TMorph $where: payload widened beyond 1 byte/px")
+      }
+      assert(Grid.unblockify(typed.toSeq.map(_.toBlock).toDS()).data.sameElements(expected),
+        s"TMorph $where diverges from the oracle")
     }
   }
 
