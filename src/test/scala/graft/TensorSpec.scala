@@ -248,6 +248,38 @@ class TensorSpec extends SparkSpec {
     assert(maxAbsDiff(viaBytes, viaF64) == 0.0)
   }
 
+  test("byte-domain morphology equals the float64 path, 1 byte/pixel throughout") {
+    // Morph (the float64 entry point, a BOOL view of TMorph) against
+    // TMorph run directly on U8 payloads: the two dtypes must agree and
+    // the U8 path must stay at 1 byte/pixel.
+    val q = Nd.zeros(Array(20, 27))
+    for (i <- q.data.indices) q.data(i) = if ((i * 7919 + 13) % 256 > 150) 1.0 else 0.0
+    for (chunks <- Seq(Seq(20, 27), Seq(7, 9)); iters <- Seq(1, 2)) {
+      val blocks = Grid.blockify(spark, "m", q, chunks)
+      val typed = TBlock.fromBlocks(blocks, DType.U8)
+      def check(name: String,
+          t: org.apache.spark.sql.Dataset[graft.tensor.TBlock],
+          f: org.apache.spark.sql.Dataset[Block]): Unit = {
+        t.collect().foreach { b =>
+          assert(b.dtype == "uint8" && b.data.length == b.shape.product,
+            s"$name: payload widened beyond 1 byte/px")
+        }
+        val viaBytes = Grid.unblockify(TBlock.toBlocks(t))
+        val viaF64 = Grid.unblockify(f)
+        assert(maxAbsDiff(viaBytes, viaF64) == 0.0,
+          s"$name diverges (chunks=$chunks iters=$iters)")
+      }
+      check("erosion", TMorph.binaryErosion(typed, 2, iterations = iters),
+        Morph.binaryErosion(blocks, 2, iterations = iters))
+      check("dilation", TMorph.binaryDilation(typed, 2, iterations = iters),
+        Morph.binaryDilation(blocks, 2, iterations = iters))
+      check("opening", TMorph.binaryOpening(typed, 2, iterations = iters),
+        Morph.binaryOpening(blocks, 2, iterations = iters))
+      check("closing", TMorph.binaryClosing(typed, 2, iterations = iters),
+        Morph.binaryClosing(blocks, 2, iterations = iters))
+    }
+  }
+
   test("binary morphology equals a naive scipy oracle via Morph and TMorph, 1 byte/pixel throughout") {
     // Independent oracle: full-array scipy binary erosion/dilation on the
     // default cross structure, the outside of the array reading as the
